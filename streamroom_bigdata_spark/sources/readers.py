@@ -79,7 +79,13 @@ def stream_file_source(
     idiomatic equivalent of the reference producer's 200 ms/record sleep,
     and of ``maxOffsetsPerTrigger`` on the Kafka source): each micro-batch
     ingests at most that many files, so a backlog drains in bounded bites
-    instead of one giant catch-up batch that can blow executor memory."""
+    instead of one giant catch-up batch that can blow executor memory.
+
+    Each micro-batch's files are listed twice: once when ``latestOffset``
+    finds them, and again in ``getBatch``, which builds the batch's relation
+    over the file paths. That second listing is cheap only while it stays on
+    the driver; ``session.get_spark`` keeps it there at any file count (see
+    the ``session`` module docstring)."""
     reader = spark.readStream.format(fmt).schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -1294,6 +1294,81 @@ def test_start_router_idempotent_end_to_end(spark, tmp_path):
     assert "batch_id" in got.columns
 
 
+LISTING_JOB = "Listing leaf files and directories"
+
+
+def _next_job_id(spark) -> int:
+    """One past the highest job id the AppStatusStore holds."""
+    return max((j for j, _ in _store_jobs(spark)), default=-1) + 1
+
+
+def _store_jobs(spark) -> list[tuple[int, str]]:
+    """(job id, description) of every job in the AppStatusStore, read once
+    the listener bus has delivered every event."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        desc = job.description()
+        out.append((job.jobId(), desc.get() if desc.isDefined() else ""))
+    return out
+
+
+def _listing_jobs_since(spark, first: int) -> list[str]:
+    return [d for j, d in _store_jobs(spark) if j >= first and d.startswith(LISTING_JOB)]
+
+
+def test_router_drains_backlog_without_listing_job(spark, tmp_path):
+    """A 48-file backlog drains in ONE availableNow trigger and lands every
+    row, with no file-listing job. The file source re-lists a batch's files
+    in getBatch; above spark.sql.sources.parallelPartitionDiscovery.threshold
+    paths (default 32) Spark does that with a job of one task per file.
+    session.get_spark keeps the listing on the driver."""
+    wire = tmp_path / "wire"
+    wire.mkdir()
+    n_files = 48
+    for i in range(n_files):
+        (wire / f"send-{i:03d}.json").write_text(
+            _wire_booking_line(f"B{2 * i}") + "\n" + _wire_booking_line(f"B{2 * i + 1}") + "\n"
+        )
+    bronze = tmp_path / "bronze"
+    first = _next_job_id(spark)
+    q = start_router(
+        parse_wire(stream_file_source(spark, str(wire), "value string", fmt="json")),
+        str(bronze), str(tmp_path / "ckpt"), trigger_once=True,
+    )
+    q.awaitTermination(120)
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [2 * n_files]
+    got = spark.read.parquet(str(bronze / "fixed_booking"))
+    assert got.select("booking_id").distinct().count() == got.count() == 2 * n_files
+    assert _listing_jobs_since(spark, first) == []
+
+
+def test_batch_id_store_read_runs_no_listing_job(spark, tmp_path):
+    """Reading an entity dir of an idempotent store (one batch_id=<n> dir
+    per micro-batch) lists its >32 batch dirs on the driver, not with a
+    listing job of one task per dir, and returns every row."""
+    import json
+    import shutil
+
+    lines = [json.loads(_wire_booking_line(f"B{i}"))["value"] for i in range(3)]
+    store = tmp_path / "store"
+    route_batch(parse_wire(spark.createDataFrame([(v,) for v in lines], "value string")),
+                str(store), batch_id=0)
+    n_batches = 40
+    entity = store / "fixed_booking"
+    # copies of the written batch dir stand in for 39 more micro-batches
+    for b in range(1, n_batches):
+        shutil.copytree(entity / "batch_id=0", entity / f"batch_id={b}")
+    first = _next_job_id(spark)
+    got = spark.read.parquet(str(entity))
+    assert got.count() == len(lines) * n_batches
+    assert got.select("batch_id").distinct().count() == n_batches
+    assert _listing_jobs_since(spark, first) == []
+
+
 def test_streaming_observe_metrics_per_micro_batch(spark, tmp_path):
     """The streaming half of the T16 telemetry surface: the SAME
     DataFrame.observe() call that powers batch Observation emits
